@@ -276,7 +276,7 @@ object QueriesSim {
     // the lifecycle family): nlist scales with the corpus
     // (max(16, ceil(N/125)) from the FULL embeddings count, same at
     // gate scales where it stays 16), assignment/search ride the
-    // data-form paths (plan size nlist-independent), and the oracle
+    // nearest-centroid kernel (plan size nlist-independent), and the oracle
     // derives the identical md5 grid from count(*) in SQL — without
     // this the fixed 16-cell grid makes the gated SEARCH quadratic in
     // corpus size (12.5k-row cells at sf10 → a 345M-row rank shuffle).
@@ -292,21 +292,18 @@ object QueriesSim {
       require(nlist <= 65536, s"q_ivf_append nlist=$nlist exceeds the " +
         "oracle's 65536-cell enumeration cap")
       val grid = IvfCosine.pinnedCentroids(nlist, DIM)
-      val cents = IvfCosine.centroidsDf(s, grid)
       val base = all.where(col("vec_id") % 3 =!= 0)
       val delta = all.where(col("vec_id") % 3 === 0)
       val path = qiaSite.fresh().resolve("idx").toString
-      IvfCosine.saveIndex(path, IvfCosine.Index(grid,
-        IvfCosine.assignByCentroidsDf(base, "vec_id", "embedding", cents)
-          .select(col("vec_id"), col("embedding"), col("cell"))),
+      IvfCosine.saveIndex(path,
+        IvfCosine.assignByCentroids(base, "vec_id", "embedding", grid),
         "vec_id", "embedding")
       IvfCosine.appendToIndex(path,
         delta.select(col("vec_id"), col("embedding")))
       val idx = IvfCosine.loadIndex(s, path, "vec_id", "embedding")
       val probes = all.where(col("vec_id") % 29 === 0)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      IvfCosine.searchDf(idx.assigned, probes, "vec_id", "embedding",
-        "qid", "qvec", IvfCosine.centroidsDf(s, idx.centroids),
+      IvfCosine.search(idx, probes, "vec_id", "embedding", "qid", "qvec",
         k = 5, nprobe = 4, dim = DIM)
         .select(col("qid"), col("nid"), round(col("cosine"), 6).as("cosine"),
           col("rank"))
@@ -326,7 +323,7 @@ object QueriesSim {
     // stale row, missed delete, or wrong-cell rewrite breaks the hash.
     // BOUNDED CELLS (round 14): grid sized from the FULL embeddings
     // count — the same derivation (and at gate scales the same 16-cell
-    // grid) as q_ivf_append above; data-form assignment/search.
+    // grid) as q_ivf_append above; kernel assignment/search.
     "q_index_maint" -> ((s, dir) => {
       val all = emb(s, dir)
       // footer-derived corpus count, as in q_ivf_append above
@@ -336,7 +333,6 @@ object QueriesSim {
       require(nlist <= 65536, s"q_index_maint nlist=$nlist exceeds " +
         "the oracle's 65536-cell enumeration cap")
       val grid = IvfCosine.pinnedCentroids(nlist, DIM)
-      val cents = IvfCosine.centroidsDf(s, grid)
       val oldSnap = all.where(col("vec_id") % 5 =!= 0)
         .select(col("vec_id"), col("embedding"))
       val newSnap = all.where(col("vec_id") % 13 =!= 0)
@@ -352,9 +348,8 @@ object QueriesSim {
       // both (they read the saved meta and the diff)
       @volatile var d: DataFrame = null
       graft.operators.ParallelInput.overlap(Seq(
-        () => IvfCosine.saveIndex(path, IvfCosine.Index(grid,
-          IvfCosine.assignByCentroidsDf(oldSnap, "vec_id", "embedding",
-            cents).select(col("vec_id"), col("embedding"), col("cell"))),
+        () => IvfCosine.saveIndex(path,
+          IvfCosine.assignByCentroids(oldSnap, "vec_id", "embedding", grid),
           "vec_id", "embedding"),
         () => d = graft.sources.SnapshotDiff.diff(oldSnap, newSnap,
           "vec_id", md5(to_json(struct(col("embedding")))))
@@ -369,8 +364,7 @@ object QueriesSim {
       val idx = IvfCosine.loadIndex(s, path, "vec_id", "embedding")
       val probes = newSnap.where(col("vec_id") % 29 === 0)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      IvfCosine.searchDf(idx.assigned, probes, "vec_id", "embedding",
-        "qid", "qvec", IvfCosine.centroidsDf(s, idx.centroids),
+      IvfCosine.search(idx, probes, "vec_id", "embedding", "qid", "qvec",
         k = 5, nprobe = 4, dim = DIM)
         .select(col("qid"), col("nid"), round(col("cosine"), 6).as("cosine"),
           col("rank"))
@@ -429,23 +423,18 @@ object QueriesSim {
     // IVF-PQ (Jégou et al. 2011 §V / the FAISS IVFPQ structure): coarse
     // cells prune the scan, residual PQ codes bound the bytes per
     // candidate, exact re-rank touches only the shortlist — the full
-    // web-scale ANN index under one oracle. Runs through the DATA-form
-    // path (centroids/codebooks broadcast as frames, plan size
-    // independent of nlist·m·nk — the production shape); the literal
-    // path is pinned equal in SimSpec.
+    // web-scale ANN index under one oracle (plan size independent of
+    // nlist·m·nk — the production shape).
     "q_ivfpq_topk" -> ((s, dir) => {
       val corpus = emb(s, dir)
-      val coarse = IvfCosine.centroidsDf(s,
-        IvfCosine.pinnedCentroids(16, DIM))
-      val books = PqCosine.codebooksDf(s,
-        PqCosine.pinnedCodebooks(m = 8, subDim = 8, k = 16))
-      val codes = IvfPq.encodeDf(corpus, "vec_id", "embedding", coarse,
-        books, m = 8)
+      val coarse = IvfCosine.pinnedCentroids(16, DIM)
+      val books = PqCosine.pinnedCodebooks(m = 8, subDim = 8, k = 16)
+      val codes = IvfPq.encode(corpus, "vec_id", "embedding", coarse,
+        books)
       val probes = corpus.where(col("vec_id") < 50)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      IvfPq.searchDf(codes, corpus, probes, "vec_id", "embedding",
-        "qid", "qvec", coarse, books, k = 5, nprobe = 4, shortlist = 20,
-        m = 8, nk = 16)
+      IvfPq.search(codes, corpus, probes, "vec_id", "embedding",
+        "qid", "qvec", coarse, books, k = 5, nprobe = 4, shortlist = 20)
         .select(col("qid"), col("nid"), round(col("cosine"), 6).as("cosine"),
           round(col("approx_cos"), 6).as("approx_cos"), col("rank"))
     }),
@@ -455,7 +444,7 @@ object QueriesSim {
     // AnnIndexIO.saveIvfPq (cell-partitioned code parquet + exact-double
     // quantizer params + row-count commit marker) -> appendIvfPq the
     // delta (only the delta is encoded, through the loaded params) ->
-    // loadIvfPq -> searchDf. Values are independent of the disk
+    // loadIvfPq -> search. Values are independent of the disk
     // round-trip, so the oracle is the plain IVF-PQ search over the
     // FULL corpus — drift anywhere in the save/append/load codec path
     // breaks the hash.
@@ -463,22 +452,19 @@ object QueriesSim {
       val all = emb(s, dir)
       val base = all.where(col("vec_id") % 3 =!= 0)
       val delta = all.where(col("vec_id") % 3 === 0)
-      val coarseArr = IvfCosine.pinnedCentroids(16, DIM)
-      val booksArr = PqCosine.pinnedCodebooks(m = 8, subDim = 8, k = 16)
-      val coarse = IvfCosine.centroidsDf(s, coarseArr)
-      val books = PqCosine.codebooksDf(s, booksArr)
+      val coarse = IvfCosine.pinnedCentroids(16, DIM)
+      val books = PqCosine.pinnedCodebooks(m = 8, subDim = 8, k = 16)
       val path = qpqSite.fresh().resolve("idx").toString
-      graft.sim.AnnIndexIO.saveIvfPq(path, coarseArr, booksArr,
-        IvfPq.encodeDf(base, "vec_id", "embedding", coarse, books, m = 8),
+      graft.sim.AnnIndexIO.saveIvfPq(path, coarse, books,
+        IvfPq.encode(base, "vec_id", "embedding", coarse, books),
         "vec_id")
       graft.sim.AnnIndexIO.appendIvfPq(path,
         delta.select(col("vec_id"), col("embedding")), "embedding")
       val idx = graft.sim.AnnIndexIO.loadIvfPq(s, path)
       val probes = all.where(col("vec_id") % 29 === 0)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      IvfPq.searchDf(idx.codes, all, probes, "vec_id", "embedding",
-        "qid", "qvec", coarse, books, k = 5, nprobe = 4, shortlist = 20,
-        m = 8, nk = 16)
+      IvfPq.search(idx.codes, all, probes, "vec_id", "embedding",
+        "qid", "qvec", coarse, books, k = 5, nprobe = 4, shortlist = 20)
         .select(col("qid"), col("nid"), round(col("cosine"), 6).as("cosine"),
           round(col("approx_cos"), 6).as("approx_cos"), col("rank"))
     }),
@@ -486,14 +472,13 @@ object QueriesSim {
     // SemDeDup (arXiv:2303.09540): pinned-centroid clustering + within-
     // cell cosine pruning, keep-lowest-centroid-sim priority. The full
     // semantic-dedup decision — assignment, priority, prune — under a
-    // bit-for-bit oracle, through the DATA-form centroid path
-    // (broadcast-joined (cell, cvec) frame — the shape that survives
-    // the paper's 50k-cluster nlist); literal path pinned equal in
-    // SemDedupSpec.
+    // bit-for-bit oracle, through the nearest-centroid kernel (plan
+    // size independent of nlist — the shape that survives the paper's
+    // 50k-cluster nlist).
     "q_semdedup" -> ((s, dir) => {
       SemDedup.dedup(emb(s, dir), "vec_id", "embedding",
-        IvfCosine.centroidsDf(s, IvfCosine.pinnedCentroids(16, DIM)),
-        threshold = thr, maxCellSize = 10000)
+        IvfCosine.pinnedCentroids(16, DIM), threshold = thr,
+        maxCellSize = 10000)
         .select(col("vec_id"), col("cell"),
           round(col("centroid_sim"), 6).as("centroid_sim"), col("keep"))
     }),
@@ -519,13 +504,12 @@ object QueriesSim {
     }),
 
     // distributed full-corpus Lloyd's (2 rounds from the pinned grid,
-    // data-form centroids throughout): the whole-corpus trainer behind
+    // kernel assignment throughout): the whole-corpus trainer behind
     // the IVF/SemDeDup quantizers — fixed iters + pinned init make the
     // fit oracle-checkable, unlike seeded-sample k-means
     "q_kmeans" -> ((s, dir) => {
       graft.sim.KMeans.fitAssign(emb(s, dir), "vec_id", "embedding",
-        IvfCosine.centroidsDf(s, IvfCosine.pinnedCentroids(8, DIM)),
-        iters = 2)
+        IvfCosine.pinnedCentroids(8, DIM), iters = 2)
         .select(col("vec_id"), col("cell"))
     }),
 
@@ -534,8 +518,7 @@ object QueriesSim {
     // broadcast back, keep-hard-examples companion of q_semdedup
     "q_proto_prune" -> ((s, dir) => {
       graft.sim.ProtoPrune.prune(emb(s, dir), "vec_id", "embedding",
-        IvfCosine.centroidsDf(s, IvfCosine.pinnedCentroids(8, DIM)),
-        keepFrac = 0.5)
+        IvfCosine.pinnedCentroids(8, DIM), keepFrac = 0.5)
         .select(col("vec_id"), col("cell"), col("centroid_sim"),
           col("keep"))
     }),
@@ -558,9 +541,8 @@ object QueriesSim {
     // item 2): nlist scales with the corpus (max(16, ceil(N/125)) — the
     // md5 grid is enumerable at any size, so the oracle derives the
     // same grid from count(*) in SQL), keeping the self-kNN probe join
-    // N·cell instead of N²/const; the centroid frame goes through the
-    // DATA-form assignment/search paths so the PLAN is also
-    // nlist-independent. 16 cells at the gate scales (500/2000 rows),
+    // N·cell instead of N²/const; the nearest-centroid kernel keeps the
+    // PLAN nlist-independent too. 16 cells at the gate scales (500/2000 rows),
     // 160 at the sf1 checkpoint — cells stay ~125 rows at every scale.
     "q_umap_ivf" -> ((s, dir) => {
       val e = emb(s, dir)
@@ -573,11 +555,9 @@ object QueriesSim {
       require(nlist <= 65536,
         s"q_umap_ivf nlist=$nlist exceeds the oracle's 65536-cell " +
           "enumeration cap — raise cellRows or the oracle's range bound")
-      val cents = IvfCosine.centroidsDf(s,
-        IvfCosine.pinnedCentroids(nlist, DIM))
       graft.ml.UmapAnalog.fitTransform(e,
-        graft.ml.UmapAnalog.ivfKnnEdgesDf(e, "vec_id", "embedding",
-          dim = DIM, k = 5, cents, nprobe = 4),
+        graft.ml.UmapAnalog.ivfKnnEdges(e, "vec_id", "embedding",
+          dim = DIM, k = 5, nlist = nlist, nprobe = 4),
         "vec_id", "embedding", dim = DIM,
         negOffsets = Seq(17L, 131L, 313L), iters = 3, lr = 0.05,
         gamma = 1.0, eps = 1e-3)

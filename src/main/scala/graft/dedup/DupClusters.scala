@@ -1,7 +1,8 @@
 package graft.dedup
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Near-duplicate cluster assignment: connected components over a
   * candidate-pair edge list by synchronous min-label propagation.
@@ -53,8 +54,8 @@ object DupClusters {
     releaseRdds()
     val spark = pairs.sparkSession
     val idType = pairs.schema(pairs.schema.fieldIndex(aCol)).dataType
-    val pDf = pairs.select(col(aCol).cast("long").as("src"),
-      col(bCol).cast("long").as("dst"))
+    val (a, b) = checkedIds(pairs, aCol, bCol)
+    val pDf = pairs.select(a.cast("long").as("src"), b.cast("long").as("dst"))
     val P0 = new org.apache.spark.HashPartitioner(
       spark.conf.get("spark.sql.shuffle.partitions", "200").toInt)
     def ckpt(r: org.apache.spark.rdd.RDD[(Long, Long)])
@@ -170,9 +171,10 @@ object DupClusters {
       val f = pairs.schema(pairs.schema.fieldIndex(aCol))
       f.dataType
     }
+    val (a, b) = checkedIds(pairs, aCol, bCol)
     val eDf = pairs
-      .select(least(col(aCol), col(bCol)).cast("long").as("lo"),
-        greatest(col(aCol), col(bCol)).cast("long").as("hi"))
+      .select(least(a, b).cast("long").as("lo"),
+        greatest(a, b).cast("long").as("hi"))
       .where(col("lo") =!= col("hi")).distinct()
     val P0 = new org.apache.spark.HashPartitioner(
       spark.conf.get("spark.sql.shuffle.partitions", "200").toInt)
@@ -267,6 +269,25 @@ object DupClusters {
   /** Per-partition exact dedup of the canonically keyed pair list —
     * runs AFTER the partitionBy, so every duplicate of a pair is
     * co-located. Bounded by the partition's distinct-edge count. */
+  /** The id contract of both clusterings, failing fast: ids must be
+    * integral (the internal 64-bit cast would turn any other type into
+    * cast errors or nulls) and never null (a null id read as a long is
+    * 0 and would merge into cluster 0; `least` would drop its edge).
+    * The type check is on the schema; the null check rides the first
+    * read of the pairs, so it costs no extra job. */
+  private def checkedIds(pairs: DataFrame, aCol: String,
+      bCol: String): (Column, Column) = {
+    Seq(aCol, bCol).foreach { c =>
+      val t = pairs.schema(c).dataType
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
+        s"DupClusters: id column $c is ${t.sql}; ids must be integral " +
+          "(tinyint, smallint, int or bigint)")
+    }
+    def nonNull(c: String) =
+      coalesce(col(c), raise_error(lit(s"DupClusters: null id in column $c")))
+    (nonNull(aCol), nonNull(bCol))
+  }
+
   private def dedupPairs(it: Iterator[(Long, Long)])
       : Iterator[(Long, Long)] = {
     val seen = new scala.collection.mutable.HashSet[(Long, Long)]

@@ -39,8 +39,9 @@ import graft.sim.{CosineTopK, IvfCosine, RandomProjection}
   * pins IVF-at-full-probe ≡ brute. Per epoch: edges(n·(k+negs)) join
   * the 3-column position frame twice, one map-side-combined groupBy —
   * everything is edge-proportional, positions are 2 doubles per node,
-  * and localCheckpoint bounds lineage per epoch (the [[graft.sim.KMeans]]
-  * iteration pattern). Epochs are a fixed constant, not a scale axis.
+  * and localCheckpoint bounds lineage per epoch (the
+  * [[graft.dedup.DupClusters]] iteration pattern). Epochs are a fixed
+  * constant, not a scale axis.
   */
 object UmapAnalog {
 
@@ -59,8 +60,11 @@ object UmapAnalog {
   }
 
   /** The SCALE path for the kNN graph: [[IvfCosine]] cell-partitioned
-    * search — corpus and probes shuffle once on the cell id instead of
-    * broadcasting the whole corpus as probes. Same (src, dst) edge
+    * search over the md5-pinned `nlist` grid — corpus and probes shuffle
+    * once on the cell id instead of broadcasting the whole corpus as
+    * probes, and the plan size is independent of nlist (the kernel
+    * carries the grid as one literal), so a CORPUS-SCALED cell count
+    * keeps cells bounded at any size. Same (src, dst) edge
     * contract as [[bruteKnnEdges]]; at nprobe == nlist the candidate set
     * is the full corpus and the edges are IDENTICAL to brute force (the
     * ranking key (cosine desc, nid) is shared), which is what
@@ -72,25 +76,6 @@ object UmapAnalog {
     val probes = emb.select(col(idCol).as("__qid"), col(vecCol).as("__qvec"))
     IvfCosine.search(index, probes, idCol, vecCol,
       "__qid", "__qvec", k, nprobe, dim)
-      .select(col("qid").cast("long").as("src"),
-        col("nid").cast("long").as("dst"))
-  }
-
-  /** [[ivfKnnEdges]] through the DATA-form centroid paths
-    * ([[IvfCosine.assignByCentroidsDf]] + [[IvfCosine.searchDf]]): the
-    * centroid grid arrives as a (cell, cvec) frame, so the plan size is
-    * independent of nlist — the shape that survives a CORPUS-SCALED
-    * cell count (nlist ∝ N keeps cells bounded; the literal plan grows
-    * O(nlist) and is the wrong vehicle for exactly the configuration
-    * that needs many cells). Values are bit-identical to the literal
-    * build (DataFormAnnSpec pins both halves). */
-  def ivfKnnEdgesDf(emb: DataFrame, idCol: String, vecCol: String,
-      dim: Int, k: Int, centroids: DataFrame, nprobe: Int): DataFrame = {
-    val assigned = IvfCosine
-      .assignByCentroidsDf(emb, idCol, vecCol, centroids)
-    val probes = emb.select(col(idCol).as("__qid"), col(vecCol).as("__qvec"))
-    IvfCosine.searchDf(assigned, probes, idCol, vecCol,
-      "__qid", "__qvec", centroids, k, nprobe, dim)
       .select(col("qid").cast("long").as("src"),
         col("nid").cast("long").as("dst"))
   }

@@ -28,7 +28,6 @@ package graft.operators
   * sizes are per-row widths × the stated row bound):
   *
   *   BOUNDED (constant or parameter-bounded rows)
-  *   - sim/KMeans (centroid table per iteration: nlist × dim)
   *   - sim/Mmr (probe shortlists: probes × shortN; round state)
   *   - ml/CortexThink train/valid: driver-trainer inputs, BOUNDED
   *     SAMPLES by the round-9+ design (fit collects train to the

@@ -52,7 +52,7 @@ object AnnIndexIO {
   // ------------------------------------------------------------- IVF-PQ
 
   /** Persist a built IVF-PQ index: `codes` must be
-    * [[IvfPq.encode]]/[[IvfPq.encodeDf]] output over the full corpus. */
+    * [[IvfPq.encode]] output over the full corpus. */
   def saveIvfPq(path: String, coarse: Array[Array[Double]],
       codebooks: Array[Array[Array[Double]]], codes: DataFrame,
       idCol: String): Unit = {
@@ -79,8 +79,8 @@ object AnnIndexIO {
   }
 
   /** Rehydrate a [[saveIvfPq]] artifact (family/shape/row-count
-    * validated). Search the result with [[IvfPq.search]]/[[IvfPq
-    * .searchDf]] passing the loaded coarse/codebooks and `codes`. */
+    * validated). Search the result with [[IvfPq.search]] passing the
+    * loaded coarse/codebooks and `codes`. */
   def loadIvfPq(spark: SparkSession, path: String,
       verifyRows: Boolean = true): IvfPqIndex = {
     val (meta, sections) = graft.ml.WeightsIO.load(s"$path/params.json")
@@ -95,8 +95,8 @@ object AnnIndexIO {
 
   /** Append a delta shard of NEW documents: the saved quantizer
     * parameters reload bit-exactly, ONLY the delta is encoded (through
-    * the data-form [[IvfPq.encodeDf]] — plan size independent of
-    * nlist·m·nk, the production shape), and the new code rows append
+    * [[IvfPq.encode]] — plan size independent of nlist·m·nk, the
+    * production shape), and the new code rows append
     * into the cell-partitioned layout. Same additions-only contract and
     * commit protocol as [[IvfCosine.appendToIndex]]. */
   def appendIvfPq(path: String, delta: DataFrame, vecCol: String): Unit = {
@@ -107,11 +107,8 @@ object AnnIndexIO {
     requireCols(delta, Seq(idCol, vecCol), "appendIvfPq delta")
     IvfCosine.requireVecDim(delta, vecCol, meta("dim").toInt,
       "appendIvfPq delta")
-    val spark = delta.sparkSession
-    val enc = IvfPq.encodeDf(delta, idCol, vecCol,
-      IvfCosine.centroidsDf(spark, readCoarse(meta, sections)),
-      PqCosine.codebooksDf(spark, readBooks(meta, sections)),
-      m = meta("m").toInt)
+    val enc = IvfPq.encode(delta, idCol, vecCol, readCoarse(meta, sections),
+      readBooks(meta, sections))
     commitAppend(path, meta, sections, enc.select(col(idCol),
       col("codes"), col("nrm"), col("cell")), partitionCols = Seq("cell"))
   }

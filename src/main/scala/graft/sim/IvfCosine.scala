@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.dedup.Similarity
+import graft.functions.NearestCentroid
 
 /** IVF (inverted-file) approximate nearest neighbor: a k-means coarse
   * quantizer partitions the corpus into `nlist` cells; each probe only
@@ -16,11 +17,12 @@ import graft.dedup.Similarity
   * 100k) — k-means centroids don't improve past that, and at 100 TB
   * feeding the full corpus through the featurizer would be the
   * bottleneck. Cell assignment of the full corpus IS distributed and
-  * map-side: MLlib's `transform` broadcasts the tiny centroid set and
-  * predicts per row (no shuffle, no collect). Centroid tables are carried
-  * as single array literals, never unrolled into per-coefficient
-  * expression nodes (which would exceed codegen method limits and ship a
-  * multi-MB plan with every task).
+  * map-side: the [[graft.functions.NearestCentroid]] kernel carries the
+  * centroid matrix as one array literal and assigns (or, for probes,
+  * routes) each row in a single codegen projection — no shuffle, no
+  * collect, and one plan node at any nlist (never per-centroid
+  * expression nodes, which would exceed codegen method limits and ship
+  * a multi-MB plan with every task).
   */
 object IvfCosine {
 
@@ -333,14 +335,11 @@ object IvfCosine {
       c
     }
     val spark = delta.sparkSession
-    // DATA-form assignment (centroids broadcast as a frame, plan size
-    // independent of nlist — bit-identical to the literal path per
-    // DataFormAnnSpec): a corpus-scaled grid (bounded-cell indexes,
-    // ~125 rows/cell) would blow the literal path's O(nlist) Catalyst
-    // tree out of codegen exactly where appends run daily
-    val assigned = assignByCentroidsDf(delta, idCol, vecCol,
-      centroidsDf(spark, cents))
-      .select(col(idCol), col(vecCol), col("cell"))
+    // kernel assignment: plan size independent of nlist, so a
+    // corpus-scaled grid (bounded-cell indexes, ~125 rows/cell) costs
+    // the daily append nothing extra to plan; each delta row lands in
+    // the cell of its OWN vector, repeated ids included
+    val assigned = assignByCentroids(delta, idCol, vecCol, cents).assigned
     // cache so the pre-write count, the written rows, the sidecar rows
     // and the new-cell list are the same materialization (the delta is
     // shard-sized by definition)
@@ -471,11 +470,8 @@ object IvfCosine {
       () => affectedIds = upserts.select(col(idCol))
         .unionByName(deleteIds.select(col(idCol))).distinct()
         .localCheckpoint(),
-      () => newAssigned =
-        assignByCentroidsDf(upserts, idCol, vecCol, // data form: see append
-          centroidsDf(spark, cents))
-          .select(col(idCol), col(vecCol), col("cell"))
-          .localCheckpoint())) // 2 consumers (cell list + rewrite)
+      () => newAssigned = assignByCentroids(upserts, idCol, vecCol, cents)
+        .assigned.localCheckpoint())) // 2 consumers (cell list + rewrite)
     // the delta's bucket list (bounded by the bucket count, shared by
     // the old-cell lookup and the sidecar rewrite — computed ONCE) and
     // the NEW-cell census are independent collects over the two
@@ -720,7 +716,7 @@ object IvfCosine {
     * 10 Lloyd iterations as 10 distributed MLlib jobs is pure scheduling
     * overhead at any scale — the sample is the same size either way.
     * Cell assignment of the full corpus stays distributed and codegen'd
-    * (assignByCentroids: centroid literals + the VecDot kernel). */
+    * (assignByCentroids: the nearest-centroid kernel). */
   def buildIndex(corpus: DataFrame, idCol: String, vecCol: String,
       nlist: Int, seed: Long = 42L, maxTrainRows: Int = 100000,
       iters: Int = 10): Index = {
@@ -811,177 +807,53 @@ object IvfCosine {
     }
 
   /** Cell assignment against FIXED centroids: per row, argmin squared
-    * euclidean distance (ties to the lowest cell id), as a pure codegen
-    * projection — d² = v·v − 2·v·c + c·c with the VecDot kernel and the
-    * centroid self-dots precomputed as literals. */
+    * euclidean distance (ties to the lowest cell id), as one codegen
+    * projection — the [[graft.functions.NearestCentroid]] kernel, whose
+    * plan is one node at any nlist. Output (idCol, vecCol, cell); each
+    * row is assigned by its own vector. */
   def assignByCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-      centroids: Array[Array[Double]]): Index = {
-    val vv = Similarity.dot(col(vecCol), col(vecCol))
-    val dists = centroids.zipWithIndex.map { case (c, i) =>
-      val cc = c.map(x => x * x).sum
-      val d2 = vv - lit(2.0) * Similarity.dot(col(vecCol),
-        typedlit(c)) + lit(cc)
-      struct(d2.as("d2"), lit(i).as("cell"))
-    }
-    val assigned = corpus.select(col(idCol), col(vecCol),
-      array_min(array(dists: _*)).getField("cell").as("cell"))
-    Index(centroids, assigned)
-  }
+      centroids: Array[Array[Double]]): Index =
+    Index(centroids, corpus.select(col(idCol), col(vecCol),
+      NearestCentroid.assign(vecCol, centroids).as("cell")))
 
-  /** The pinned/trained centroid grid as DATA — (cell int, cvec
-    * array<double>) — for the data-form assignment path. */
-  def centroidsDf(spark: org.apache.spark.sql.SparkSession,
-      centroids: Array[Array[Double]]): DataFrame = {
-    import spark.implicits._
-    centroids.zipWithIndex.map { case (c, i) => (i, c) }.toSeq
-      .toDF("cell", "cvec")
-  }
+  /** Each row's own centroid vector, looked up by its `cell`. */
+  private[sim] def centroidOfCell(centroids: Array[Array[Double]]) =
+    element_at(typedlit(centroids), col("cell") + 1)
 
-  /** Data-form cell assignment: the centroid grid arrives as a
-    * DataFrame (cell, cvec) and is BROADCAST-joined instead of being
-    * interpolated into the plan as literals — the plan size is
-    * independent of nlist, which is what survives SemDeDup's 50k
-    * clusters / production IVF nlist (the literal path's Catalyst tree
-    * grows O(nlist) and hits janino/analyzer limits first). The shape
-    * stays one pass: broadcast nested-loop join fans each row out to
-    * nlist candidates INSIDE its partition, and the per-id argmin
-    * collapses them right back map-side (partial min before the one
-    * id-keyed exchange). Values are bit-identical to
-    * [[assignByCentroids]] — same d² = v·v − 2·v·c + c·c with the
-    * VecDot kernel (the driver-side `Σx²` of the literal path is the
-    * same index-ascending fold), same lexicographic (d², cell) argmin.
-    *
-    * Output: (idCol, vecCol, cell, __cvec — the winning centroid's
-    * vector, for callers that need centroid similarity). */
-  def assignByCentroidsDf(corpus: DataFrame, idCol: String,
-      vecCol: String, centroids: DataFrame): DataFrame = {
-    // per-SIDE terms precomputed BEFORE the fan-out: v·v once per row
-    // (a projection below the join — the join boundary stops
-    // CollapseProject from inlining it back into the per-pair
-    // expression) and c·c once per centroid inside the broadcast —
-    // without this the per-pair d² evaluates THREE dim-length dots
-    // instead of one (measured 3× the assignment cost at nlist=160).
-    // Same IEEE ops as the literal path (VecDot's ascending fold; the
-    // literal path's driver-side Σx² is the same fold), so values stay
-    // bit-identical (DataFormAnnSpec pins it).
-    val cents = broadcast(centroids.select(col("cell").as("__cell"),
-      col("cvec").as("__cvec"),
-      Similarity.dot(col("cvec"), col("cvec")).as("__cc")))
-    val pre0 = corpus.select(col(idCol), col(vecCol),
-      Similarity.dot(col(vecCol), col(vecCol)).as("__vv"))
-    // the broadcast fan-out multiplies each input partition nlist× —
-    // a corpus that arrives in fewer partitions than cores (one small
-    // parquet file) would run the whole nlist·N join+argmin on ONE
-    // core. Spread it first in that case (measured 7× on the lifecycle
-    // gate); a corpus at scale already exceeds core count and skips
-    // the extra exchange. The .rdd partition probe is only free on an
-    // exchange-free plan — under AQE it materializes every upstream
-    // query stage as real jobs (measured +0.5s per call on inputs that
-    // arrive through an explicit spread), so a plan that already
-    // carries a user repartition skips the probe outright: its
-    // partition count is pinned by that repartition (AQE does not
-    // coalesce user-specified counts) and is >= the parallelism target
-    // in every spread-input shape.
-    val sc = corpus.sparkSession.sparkContext
-    val alreadySpread = pre0.queryExecution.analyzed.exists {
-      // only count-pinned repartitions: AQE may coalesce a keyed
-      // repartition with no explicit count back below the target
-      case r: org.apache.spark.sql.catalyst.plans.logical.Repartition
-        if r.shuffle => true
-      case r: org.apache.spark.sql.catalyst.plans.logical
-        .RepartitionByExpression if r.optNumPartitions.isDefined => true
-      case _ => false
-    }
-    val pre =
-      if (alreadySpread) pre0
-      else if (pre0.rdd.getNumPartitions < sc.defaultParallelism)
-        pre0.repartition(sc.defaultParallelism)
-      else pre0
-    val d2 = col("__vv") -
-      lit(2.0) * Similarity.dot(col(vecCol), col("__cvec")) +
-      col("__cc")
-    // the argmin struct carries only (d², cell) — 12 bytes, not the
-    // dim-length centroid array (which made every partial-aggregation
-    // update copy ~0.5 KB); the winning centroid's vector re-attaches
-    // by one broadcast equi-join on the cell id afterwards. Tie order
-    // unchanged: (d², cell) is decisive on its own (cell ids unique).
-    pre.crossJoin(cents)
-      .groupBy(col(idCol))
-      .agg(min(struct(d2.as("d2"), col("__cell").as("cell"))).as("__best"),
-        first(col(vecCol)).as(vecCol))
-      .select(col(idCol), col(vecCol), col("__best.cell").as("cell"))
-      .join(broadcast(centroids.select(col("cell"),
-        col("cvec").as("__cvec"))), Seq("cell"))
-      .select(col(idCol), col(vecCol), col("cell"), col("__cvec"))
-  }
+  /** One row per (probe, probed cell): `probes` plus `cell` and
+    * `__qc`, the raw dot(q, c), from the kernel's probe mode. Columns of
+    * `probes` are computed below the generator, once per probe. The
+    * rank bound is always true: it restates the kernel's top-nprobe cut
+    * as a Filter so the optimizer sees a selective probe side — dynamic
+    * partition pruning of a cell-partitioned scan is planned only
+    * behind one (PlanSpec pins it). It bounds the rank, not the cell,
+    * so constraint propagation cannot copy it across the cell join onto
+    * the corpus side (where it would re-run the kernel). */
+  private[sim] def probeCells(probes: DataFrame, qvecCol: String,
+      centroids: Array[Array[Double]], nprobe: Int): DataFrame =
+    probes.select(col("*"),
+        posexplode(NearestCentroid.probe(qvecCol, centroids, nprobe))
+          .as(Seq("__rank", "__p")))
+      .where(col("__rank") < nprobe)
+      .select(col("*"), col("__p.cell").as("cell"),
+        col("__p.qc").as("__qc"))
+      .drop("__rank", "__p")
 
   /** Top-k cosine neighbors per probe, scanning only the nprobe closest
-    * cells of each probe. Probes carry (qidCol, qvecCol). */
+    * cells of each probe. Probes carry (qidCol, qvecCol). Routing is the
+    * kernel's probe mode (top-nprobe cells by centroid cosine, ties to
+    * the lower cell id) — a per-probe projection, no window and no
+    * shuffle; the in-cell scan is the equi-join on the cell id. */
   def search(index: Index, probes: DataFrame, idCol: String, vecCol: String,
       qidCol: String, qvecCol: String, k: Int, nprobe: Int,
       dim: Int): DataFrame = {
-    // centroid table as ONE nested-array literal; probe-side cell ranking
-    // explodes nlist tiny structs per probe (probes are the small side)
-    val cents = typedlit(index.centroids)
     val qn = sqrt(Similarity.dotExpr(col(qvecCol), col(qvecCol), dim))
-    val probeCells = probes
-      .select(col(qidCol), col(qvecCol), qn.as("__qn"),
-        posexplode(cents).as(Seq("__c0", "cvec")))
-      .withColumn("__csim",
-        Similarity.dot(col(qvecCol), col("cvec"))
-          / (col("__qn") * sqrt(Similarity.dot(col("cvec"), col("cvec")))))
-      .withColumn("__crank", row_number().over(
-        Window.partitionBy(col(qidCol))
-          .orderBy(col("__csim").desc, col("__c0"))))
-      .where(col("__crank") <= nprobe)
-      .select(col(qidCol), col(qvecCol), col("__qn"),
-        col("__c0").as("cell"))
-    searchCore(probeCells, index.assigned, idCol, vecCol, qidCol, qvecCol,
-      k, dim)
-  }
-
-  /** Data-form search: the centroid grid arrives as a (cell, cvec)
-    * DataFrame and probe routing runs as a broadcast join + per-probe
-    * rank — the plan size is INDEPENDENT of nlist (the literal path's
-    * Catalyst tree grows O(nlist), which a corpus-scaled cell count
-    * outgrows — same rationale as [[assignByCentroidsDf]]). Values are
-    * identical to [[search]]: same cosine routing, same (desc, cell)
-    * tie order, same cell equi-join core (SimSpec pins literal ≡ data). */
-  def searchDf(assigned: DataFrame, probes: DataFrame, idCol: String,
-      vecCol: String, qidCol: String, qvecCol: String,
-      centroids: DataFrame, k: Int, nprobe: Int, dim: Int): DataFrame = {
-    // centroid self-norms precomputed once per centroid inside the
-    // broadcast (same IEEE value as the per-pair form — one sqrt of
-    // the same fold), mirroring assignByCentroidsDf's per-side terms
-    val cents = broadcast(centroids.select(col("cell").as("__c0"),
-      col("cvec").as("__cv"),
-      sqrt(Similarity.dot(col("cvec"), col("cvec"))).as("__cn0")))
-    val qn = sqrt(Similarity.dotExpr(col(qvecCol), col(qvecCol), dim))
-    val probeCells = probes
-      .select(col(qidCol), col(qvecCol), qn.as("__qn"))
-      .crossJoin(cents)
-      .withColumn("__csim",
-        Similarity.dot(col(qvecCol), col("__cv"))
-          / (col("__qn") * col("__cn0")))
-      .withColumn("__crank", row_number().over(
-        Window.partitionBy(col(qidCol))
-          .orderBy(col("__csim").desc, col("__c0"))))
-      .where(col("__crank") <= nprobe)
-      .select(col(qidCol), col(qvecCol), col("__qn"),
-        col("__c0").as("cell"))
-    searchCore(probeCells, assigned, idCol, vecCol, qidCol, qvecCol,
-      k, dim)
-  }
-
-  /** Shared in-cell scan + exact ranking behind both routing paths:
-    * probeCells (qid, qvec, __qn, cell) equi-join the assigned corpus
-    * on the cell id, cosine, top-k per probe. */
-  private def searchCore(probeCells: DataFrame, assigned: DataFrame,
-      idCol: String, vecCol: String, qidCol: String, qvecCol: String,
-      k: Int, dim: Int): DataFrame = {
-    val corpus = assigned.select(col(idCol), col(vecCol), col("cell"),
+    val routed = probeCells(
+      probes.select(col(qidCol), col(qvecCol), qn.as("__qn")), qvecCol,
+      index.centroids, nprobe)
+    val corpus = index.assigned.select(col(idCol), col(vecCol), col("cell"),
       sqrt(Similarity.dotExpr(col(vecCol), col(vecCol), dim)).as("__cn"))
-    probeCells.join(corpus, Seq("cell"))
+    routed.join(corpus, Seq("cell"))
       .where(col(qidCol) =!= col(idCol))
       .select(col(qidCol).as("qid"), col(idCol).as("nid"),
         (Similarity.dotExpr(col(qvecCol), col(vecCol), dim)

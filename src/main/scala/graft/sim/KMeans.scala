@@ -2,6 +2,7 @@ package graft.sim
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.NearestCentroid
 
 /** Distributed fixed-iteration Lloyd's k-means over an embedding
   * column — the FULL-CORPUS trainer for the coarse quantizers the ANN /
@@ -12,24 +13,19 @@ import org.apache.spark.sql.functions._
   * rows); this operator is the complementary path for when the trainer
   * must see the whole corpus — k proportional to corpus size (the
   * SemDeDup regime, nlist ~ 50k at paper scale), or per-cluster
-  * statistics that a sample cannot estimate. Everything is data-form:
-  * centroids are a (cell, cvec) frame, never plan literals, so plan
-  * size is independent of nlist (the r7 DataFormAnnSpec contract).
+  * statistics that a sample cannot estimate. Centroids travel as a
+  * driver-side matrix: nlist × dim doubles, which every round collects
+  * anyway, and which the [[graft.functions.NearestCentroid]] kernel
+  * carries as one array literal — plan size independent of nlist.
   *
-  * Per iteration, TWO relational steps:
-  *   1. assignment — [[IvfCosine.assignByCentroidsDf]]: broadcast the
-  *      centroid frame, fan each row out to nlist candidates inside its
-  *      partition, per-id argmin collapses map-side before the one
-  *      id-keyed exchange; deterministic (d², cell) tie-break;
-  *   2. update — per-(cell, coordinate) MEAN via posexplode + a
-  *      map-side-combined groupBy: the shuffle carries at most
-  *      nlist × dim partial rows per task regardless of corpus size,
-  *      then nlist tiny sorted-collect rows reassemble the vectors.
-  * Cells that lose every member keep their previous centroid (the
-  * standard Lloyd's convention, mirrored in the oracle's LEFT JOIN).
-  * The centroid frame is localCheckpoint'ed each round (nlist rows) so
-  * analyzer/lineage cost stays linear in `iters` — the
-  * [[graft.dedup.DupClusters]] iteration pattern.
+  * Per iteration, ONE corpus pass: kernel assignment feeds a
+  * per-(cell, coordinate) MEAN via posexplode + a map-side-combined
+  * groupBy (the shuffle carries at most nlist × dim partial rows per
+  * task regardless of corpus size), and the nlist mean rows are
+  * collected. Cells that lose every member keep their previous
+  * centroid (the standard Lloyd's convention, mirrored in the oracle's
+  * LEFT JOIN). Nothing per round outlives the collect, so lineage stays
+  * one round deep.
   *
   * Fixed `iters` with a pinned init makes the whole fit DETERMINISTIC
   * up to floating-point summation order (partial-aggregated means can
@@ -47,14 +43,14 @@ object KMeans {
   private val liveCaches =
     graft.operators.GraftTransformer.newCacheQueue()
 
-  /** `iters` Lloyd rounds from `init` (cell, cvec); returns the final
-    * centroid frame (cell, cvec). The corpus projection is persisted
-    * once — every round's two passes and the caller's final assignment
-    * read it, not the source scan. */
+  /** `iters` Lloyd rounds from `init` (one row per cell, cell id =
+    * index); returns the final centroids. The corpus projection is
+    * persisted once — every round's pass and the caller's final
+    * assignment read it, not the source scan. */
   def lloyd(vecs: DataFrame, idCol: String, vecCol: String,
-      init: DataFrame, iters: Int): DataFrame = {
+      init: Array[Array[Double]], iters: Int): Array[Array[Double]] = {
     liveCaches.release()
-    lloydOn(keepCorpus(vecs, idCol, vecCol), idCol, vecCol, init, iters)
+    lloydOn(keepCorpus(vecs, idCol, vecCol), vecCol, init, iters)
   }
 
   private def keepCorpus(vecs: DataFrame, idCol: String,
@@ -63,25 +59,27 @@ object KMeans {
       vecs.select(col(idCol), col(vecCol))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-  private def lloydOn(corpus: DataFrame, idCol: String, vecCol: String,
-      init: DataFrame, iters: Int): DataFrame = {
+  private def lloydOn(corpus: DataFrame, vecCol: String,
+      init: Array[Array[Double]], iters: Int): Array[Array[Double]] = {
     require(iters >= 1, s"iters must be positive: $iters")
-    var cents = init.select(col("cell"), col("cvec"))
+    var cents = init
     var i = 0
     while (i < iters) {
-      cents = oneRound(corpus, idCol, vecCol, cents)
+      cents = oneRound(corpus, vecCol, cents)
       i += 1
     }
     cents
   }
 
-  /** One Lloyd round: assignment + per-(cell, coordinate) mean;
-    * localCheckpoint bounds lineage to one round. */
-  private def oneRound(corpus: DataFrame, idCol: String, vecCol: String,
-      cents: DataFrame): DataFrame = {
-    val assigned = IvfCosine.assignByCentroidsDf(
-      corpus, idCol, vecCol, cents)
-    val means = assigned
+  /** One Lloyd round: kernel assignment + per-(cell, coordinate) mean,
+    * collected (nlist rows); a cell with no members keeps its previous
+    * centroid. */
+  private def oneRound(corpus: DataFrame, vecCol: String,
+      cents: Array[Array[Double]]): Array[Array[Double]] = {
+    // assign in its own projection: a column selected beside a
+    // generator is evaluated after it, once per exploded coordinate
+    val means = corpus
+      .select(NearestCentroid.assign(vecCol, cents).as("cell"), col(vecCol))
       .select(col("cell"),
         posexplode(col(vecCol).cast("array<double>"))
           .as(Seq("__i", "__x")))
@@ -91,43 +89,38 @@ object KMeans {
       .agg(transform(
         array_sort(collect_list(struct(col("__i"), col("__mu")))),
         e => e.getField("__mu")).as("__new"))
-    cents.join(means, Seq("cell"), "left")
-      .select(col("cell"),
-        coalesce(col("__new"), col("cvec")).as("cvec"))
-      .localCheckpoint()
+      .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).toMap
+    cents.indices.map(c => means.getOrElse(c, cents(c))).toArray
   }
 
-  /** Max L2 centroid movement between two (cell, cvec) frames — an
-    * nlist-row action, negligible next to the round's corpus passes. */
-  private def maxMovement(prev: DataFrame, next: DataFrame): Double =
-    prev.select(col("cell"), col("cvec").as("__a"))
-      .join(next.select(col("cell"), col("cvec").as("__b")), Seq("cell"))
-      .agg(max(sqrt(aggregate(
-        zip_with(col("__a"), col("__b"), (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, v) => acc + v))).as("__m"))
-      .head().getDouble(0)
+  /** Max L2 centroid movement between two centroid sets. */
+  private def maxMovement(prev: Array[Array[Double]],
+      next: Array[Array[Double]]): Double =
+    prev.zip(next).map { case (a, b) =>
+      math.sqrt(a.zip(b).foldLeft(0.0) { case (acc, (x, y)) =>
+        acc + (x - y) * (x - y) })
+    }.max
 
   /** CONVERGENCE-mode Lloyd's — the standard stopping contract: iterate
     * until the max centroid movement drops below `tol`, hard-capped at
     * `maxIters` rounds (a cap, not a target — separated data stops in a
-    * handful of rounds). Returns (centroids, rounds run). Each round
-    * adds one nlist-row movement action on top of [[lloyd]]'s two
-    * corpus passes; lineage stays bounded via the same per-round
-    * localCheckpoint. Convergence-mode fits are NOT oracle-checkable
-    * (the round count depends on float sums), so the driver-gate query
-    * (q_kmeans) stays on the fixed-iteration form; this is the
-    * production trainer contract, pinned by SimSpec's separated-blobs
-    * early-stop test. */
+    * handful of rounds). Returns (centroids, rounds run); the movement
+    * is measured driver-side on the collected centroids. Convergence-mode
+    * fits are NOT oracle-checkable (the round count depends on float
+    * sums), so the driver-gate query (q_kmeans) stays on the
+    * fixed-iteration form; this is the production trainer contract,
+    * pinned by DataFormAnnSpec's separated-blobs early-stop test. */
   def lloydConverged(vecs: DataFrame, idCol: String, vecCol: String,
-      init: DataFrame, maxIters: Int, tol: Double): (DataFrame, Int) = {
+      init: Array[Array[Double]], maxIters: Int,
+      tol: Double): (Array[Array[Double]], Int) = {
     require(maxIters >= 1, s"maxIters must be positive: $maxIters")
     liveCaches.release()
     val corpus = keepCorpus(vecs, idCol, vecCol)
-    var cents = init.select(col("cell"), col("cvec")).localCheckpoint()
+    var cents = init
     var i = 0
     var moved = Double.MaxValue
     while (i < maxIters && moved >= tol) {
-      val next = oneRound(corpus, idCol, vecCol, cents)
+      val next = oneRound(corpus, vecCol, cents)
       moved = maxMovement(cents, next)
       cents = next
       i += 1
@@ -139,11 +132,10 @@ object KMeans {
     * centroids after `iters` rounds — the fit passes and the final
     * assignment all read the one persisted corpus projection. */
   def fitAssign(vecs: DataFrame, idCol: String, vecCol: String,
-      init: DataFrame, iters: Int): DataFrame = {
+      init: Array[Array[Double]], iters: Int): DataFrame = {
     liveCaches.release()
     val corpus = keepCorpus(vecs, idCol, vecCol)
-    IvfCosine.assignByCentroidsDf(corpus, idCol, vecCol,
-      lloydOn(corpus, idCol, vecCol, init, iters))
-      .select(col(idCol), col("cell"))
+    val cents = lloydOn(corpus, vecCol, init, iters)
+    corpus.select(col(idCol), NearestCentroid.assign(vecCol, cents).as("cell"))
   }
 }

@@ -68,8 +68,8 @@ object PqCosine {
   }
 
   /** Codebooks as DATA — one row per (subspace, code): (m int, k int,
-    * bv array<double>) — for the data-form IVF-PQ paths
-    * ([[IvfPq.encodeDf]] / [[IvfPq.searchDf]]). */
+    * bv array<double>) — the broadcast side of [[IvfPq.encode]]'s
+    * residual coding and [[IvfPq.search]]'s LUT build. */
   def codebooksDf(spark: org.apache.spark.sql.SparkSession,
       codebooks: Array[Array[Array[Double]]]): DataFrame = {
     import spark.implicits._

@@ -12,11 +12,12 @@ import graft.dedup.Similarity
   * cluster — prototypical examples are the ones large datasets can
   * spare, and pruning them per-cluster keeps coverage of the space.
   * The keep-hard-examples complement of [[SemDedup]]'s near-duplicate
-  * cut; both ride the same data-form cell assignment.
+  * cut; both ride the same nearest-centroid kernel.
   *
-  * Plan shape: ONE broadcast fan-out + map-side argmin assignment
-  * ([[IvfCosine.assignByCentroidsDf]] — plan size independent of
-  * nlist), a scan-speed centroid-cosine projection, then per-CELL
+  * Plan shape: kernel cell assignment
+  * ([[graft.functions.NearestCentroid]] — one projection, plan size
+  * independent of nlist) and the centroid-cosine in the same
+  * scan-speed projection, then per-CELL
   * exact-percentile cuts — an nlist-row aggregate broadcast back (the
   * [[graft.text.LmBuckets]] cut shape, never a per-cell sort or
   * window). Sims and cuts are rounded to 6 decimals before the
@@ -24,8 +25,8 @@ import graft.dedup.Similarity
   * the cut aggregate for `approx_percentile` exactly as LmBuckets
   * documents. The scored frame is persisted once for the two passes.
   *
-  * Centroids come as a (cell, cvec) frame — pinned grids for the
-  * oracle, [[KMeans.lloyd]] output in production.
+  * Centroids are a driver-side matrix (cell id = row index) — pinned
+  * grids for the oracle, [[KMeans.lloyd]] output in production.
   *
   * No reference analog; greenfield SURVEY.md §7.6 scope.
   */
@@ -41,18 +42,18 @@ object ProtoPrune {
     * sketch (map-side partials, no per-cell value buffer) — the 100 TB
     * form; exact by default so the keep set oracles bit-for-bit. */
   def prune(vecs: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, keepFrac: Double,
+      centroids: Array[Array[Double]], keepFrac: Double,
       approxCuts: Boolean = false, accuracy: Int = 10000): DataFrame = {
     require(keepFrac > 0 && keepFrac < 1, s"keepFrac out of (0,1): $keepFrac")
     liveCaches.release()
-    val assigned = IvfCosine.assignByCentroidsDf(
-      vecs, idCol, vecCol, centroids)
-    val scored = liveCaches.keep(assigned
+    val cvec = IvfCosine.centroidOfCell(centroids)
+    val scored = liveCaches.keep(IvfCosine
+      .assignByCentroids(vecs, idCol, vecCol, centroids).assigned
       .select(col(idCol), col("cell"),
         graft.functions.FastRound(
-          Similarity.dot(col(vecCol), col("__cvec")) /
+          Similarity.dot(col(vecCol), cvec) /
             (sqrt(Similarity.dot(col(vecCol), col(vecCol))) *
-              sqrt(Similarity.dot(col("__cvec"), col("__cvec")))), 6)
+              sqrt(Similarity.dot(cvec, cvec))), 6)
           .as("centroid_sim"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val qAgg =

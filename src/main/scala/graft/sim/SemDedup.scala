@@ -15,18 +15,13 @@ import graft.dedup.Similarity
   * cluster centroid (they are the least redundant representatives);
   * ties break on id, so the result is fully deterministic.
   *
-  * Spark shape: two cell-assignment paths share one pruning core.
-  * The LITERAL path bakes the centroid grid into the plan as a
-  * `typedlit` table (a pure codegen projection — right for the small
-  * pinned grids the bit-exact oracles use); the DATA path
-  * ([[dedup(corpus:org\.apache\.spark\.sql\.DataFrame,idCol:String,vecCol:String,centroids:org\.apache\.spark\.sql\.DataFrame,threshold:Double,maxCellSize:Int)*]])
-  * takes the centroids as a DataFrame and broadcast-joins the
-  * assignment, so the Catalyst plan size is INDEPENDENT of nlist — the
-  * path that survives the paper's own scale (50k clusters × dim 768+,
-  * where literal grids are tens of millions of doubles in the
-  * expression tree). Either way the only shuffle after assignment is
-  * the self-equi-join on the cell id, and the exchange is planned ONCE
-  * for both sides (exchange reuse on the identical child). The
+  * Spark shape: cell assignment is the
+  * [[graft.functions.NearestCentroid]] kernel — the centroid grid rides
+  * the plan as ONE array literal, so the Catalyst plan size is
+  * INDEPENDENT of nlist, the property that survives the paper's own
+  * scale (50k clusters × dim 768+). After assignment the only shuffle
+  * is the self-equi-join on the cell id, and the exchange is planned
+  * ONCE for both sides (exchange reuse on the identical child). The
   * quadratic pairwise work is bounded per cell — exactly the paper's
   * scaling argument: nlist grows with the corpus so cells stay a few
   * thousand rows regardless of total scale, and `maxCellSize`
@@ -36,9 +31,8 @@ import graft.dedup.Similarity
   *
   * Against a PINNED centroid grid (md5-derived, engine-reproducible) the
   * whole operator — assignment, priority, pairwise pruning — verifies
-  * bit-for-bit against the DuckDB oracle through BOTH paths (the data
-  * path is value-identical by construction: same VecDot kernel, same
-  * lexicographic argmin — pinned by an equality test at nlist 1024);
+  * bit-for-bit against the DuckDB oracle (DataFormAnnSpec pins the
+  * kernel's argmin to a driver-side reference up to nlist 1024);
   * seeded k-means training of the quantizer is covered by
   * [[IvfCosine.buildIndex]]'s recall tests.
   *
@@ -49,12 +43,11 @@ object SemDedup {
   /** One row per input vector: (idCol, cell, centroid_sim, keep).
     * `keep = false` iff some same-cell vector with strictly higher
     * priority (lower centroid_sim, ties by lower id) has
-    * cosine ≥ threshold to this one. Literal-grid assignment path. */
+    * cosine ≥ threshold to this one. */
   def dedup(corpus: DataFrame, idCol: String, vecCol: String,
       centroids: Array[Array[Double]], threshold: Double,
       maxCellSize: Int = 10000): DataFrame = {
-    val cents = typedlit(centroids)
-    val cvec = element_at(cents, col("cell") + 1)
+    val cvec = IvfCosine.centroidOfCell(centroids)
     // one projection: cell, self-norm, cosine-to-own-centroid (priority)
     val assigned = IvfCosine
       .assignByCentroids(corpus, idCol, vecCol, centroids).assigned
@@ -65,24 +58,7 @@ object SemDedup {
     prune(assigned, idCol, vecCol, threshold, maxCellSize)
   }
 
-  /** Data-form path: centroids as a (cell, cvec) DataFrame,
-    * broadcast-joined (see [[IvfCosine.assignByCentroidsDf]]) — plan
-    * size independent of nlist, results identical to the literal path. */
-  def dedup(corpus: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, threshold: Double,
-      maxCellSize: Int): DataFrame = {
-    val assigned = IvfCosine
-      .assignByCentroidsDf(corpus, idCol, vecCol, centroids)
-      .withColumn("__nrm", sqrt(Similarity.dot(col(vecCol), col(vecCol))))
-      .withColumn("centroid_sim",
-        Similarity.dot(col(vecCol), col("__cvec"))
-          / (col("__nrm")
-             * sqrt(Similarity.dot(col("__cvec"), col("__cvec")))))
-      .drop("__cvec")
-    prune(assigned, idCol, vecCol, threshold, maxCellSize)
-  }
-
-  /** Shared pruning core over an assigned frame
+  /** Pruning core over the assigned frame
     * (idCol, vecCol, cell, __nrm, centroid_sim). */
   private def prune(assigned: DataFrame, idCol: String, vecCol: String,
       threshold: Double, maxCellSize: Int): DataFrame = {

@@ -94,7 +94,7 @@ object Bpe {
     // round's pair-count query re-render a plan that grew round over
     // round (AQE's explainString OOMed the driver on the sf corpus);
     // checkpointing cuts lineage to the materialized blocks — the same
-    // bounded-iteration pattern as [[graft.sim.KMeans]]/DupClusters.
+    // bounded-iteration pattern as DupClusters.
     var vocab = docs
       .select(explode(CorpusOps.words(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("n"))

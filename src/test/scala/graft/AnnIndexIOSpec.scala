@@ -35,21 +35,17 @@ class AnnIndexIOSpec extends AnyFunSuite {
     "through the loaded params equals a union rebuild") {
     val coarse = IvfCosine.pinnedCentroids(4, dim)
     val books = PqCosine.pinnedCodebooks(m = 4, subDim = 2, k = 8)
-    val (coarseDf, booksDf) = (IvfCosine.centroidsDf(spark, coarse),
-      PqCosine.codebooksDf(spark, books))
     val base = vecs(0 until 60, 31).cache()
     val delta = vecs(60 until 90, 32).cache()
     val all = base.unionByName(delta)
     val probes = all.where(col("vec_id") % 9 === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     def search(codes: DataFrame) =
-      IvfPq.searchDf(codes, all, probes, "vec_id", "embedding",
-        "qid", "qvec", coarseDf, booksDf, k = 3, nprobe = 3,
-        shortlist = 10, m = 4, nk = 8)
+      IvfPq.search(codes, all, probes, "vec_id", "embedding",
+        "qid", "qvec", coarse, books, k = 3, nprobe = 3, shortlist = 10)
     val p = tmp("ivfpq")
     AnnIndexIO.saveIvfPq(p, coarse, books,
-      IvfPq.encodeDf(base, "vec_id", "embedding", coarseDf, booksDf,
-        m = 4), "vec_id")
+      IvfPq.encode(base, "vec_id", "embedding", coarse, books), "vec_id")
     AnnIndexIO.appendIvfPq(p, delta, "embedding")
     val loaded = AnnIndexIO.loadIvfPq(spark, p)
     // quantizer parameters round-trip bit-exactly
@@ -58,8 +54,7 @@ class AnnIndexIOSpec extends AnyFunSuite {
     assert(loaded.codebooks.indices.forall(mi =>
       loaded.codebooks(mi).indices.forall(ki =>
         loaded.codebooks(mi)(ki).sameElements(books(mi)(ki)))))
-    val rebuilt = IvfPq.encodeDf(all, "vec_id", "embedding", coarseDf,
-      booksDf, m = 4)
+    val rebuilt = IvfPq.encode(all, "vec_id", "embedding", coarse, books)
     assert(bits(search(loaded.codes)) == bits(search(rebuilt)),
       "search over the loaded+appended codes must equal a union rebuild")
     assert(bits(search(loaded.codes)).nonEmpty)
@@ -159,25 +154,21 @@ class AnnIndexIOSpec extends AnyFunSuite {
   }
 
   test("serve a probe STREAM against the persisted IVF-PQ index: " +
-    "per-batch searchDf over loadIvfPq equals the batch search (the " +
+    "per-batch search over loadIvfPq equals the batch search (the " +
     "compressed-index query-serving shape — code table built once, " +
     "queries arrive forever)") {
     val coarse = IvfCosine.pinnedCentroids(4, dim)
     val books = PqCosine.pinnedCodebooks(m = 4, subDim = 2, k = 8)
-    val (coarseDf, booksDf) = (IvfCosine.centroidsDf(spark, coarse),
-      PqCosine.codebooksDf(spark, books))
     val corpus = vecs(0 until 90, 71).cache()
     val p = tmp("ivfpq-serve")
     AnnIndexIO.saveIvfPq(p, coarse, books,
-      IvfPq.encodeDf(corpus, "vec_id", "embedding", coarseDf, booksDf,
-        m = 4), "vec_id")
+      IvfPq.encode(corpus, "vec_id", "embedding", coarse, books), "vec_id")
     val loaded = AnnIndexIO.loadIvfPq(spark, p)
     val probes = corpus.where(col("vec_id") % 9 === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     def search(ps: DataFrame) =
-      IvfPq.searchDf(loaded.codes, corpus, ps, "vec_id", "embedding",
-        "qid", "qvec", coarseDf, booksDf, k = 3, nprobe = 3,
-        shortlist = 10, m = 4, nk = 8)
+      IvfPq.search(loaded.codes, corpus, ps, "vec_id", "embedding",
+        "qid", "qvec", coarse, books, k = 3, nprobe = 3, shortlist = 10)
     val dir = java.nio.file.Files.createTempDirectory("graft-pqserve")
     val inDir = dir.resolve("in").toString
     probes.write.parquet(inDir)

@@ -12,7 +12,7 @@ import graft.sources.SnapshotDiff
   * (fixed) coarse quantizer, the index table is maintained merge-on-read
   * via resolveLatest, and the maintained index is row-identical to a
   * full batch rebuild — so searches over it are too. The re-assignment
-  * job is delta-proportional by construction (assignByCentroidsDf runs
+  * job is delta-proportional by construction (assignByCentroids runs
   * on the delta frame alone; the corpus at rest is never re-scored). */
 class AnnMaintenanceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -21,12 +21,10 @@ class AnnMaintenanceSpec extends AnyFunSuite {
   private lazy val emb = spark.read
     .parquet("/root/testdata/sf0.001/embeddings.parquet")
     .select(col("vec_id"), col("embedding"))
-  private lazy val cents =
-    IvfCosine.centroidsDf(spark, IvfCosine.pinnedCentroids(8, DIM))
+  private lazy val cents = IvfCosine.pinnedCentroids(8, DIM)
 
   private def assign(df: DataFrame): DataFrame =
-    IvfCosine.assignByCentroidsDf(df, "vec_id", "embedding", cents)
-      .select(col("vec_id"), col("embedding"), col("cell"))
+    IvfCosine.assignByCentroids(df, "vec_id", "embedding", cents).assigned
 
   test("delta-only re-assignment + MOR resolve == full index rebuild; " +
     "IVF search over the maintained index matches the rebuilt one") {

@@ -152,6 +152,32 @@ class CorpusSpec extends AnyFunSuite {
       s"one component labeled by its min id; got $cc")
   }
 
+  test("dup clusters: string and null ids fail fast instead of merging " +
+    "into one cluster") {
+    // numeric strings cast to longs cleanly, so only the type guard
+    // stops them
+    val strPairs = Seq(("10", "2"), ("2", "3")).toDF("id_a", "id_b")
+    for (run <- Seq(
+        () => DupClusters.minLabelClusters(strPairs, "id_a", "id_b"),
+        () => DupClusters.connectedComponents(strPairs, "id_a", "id_b"))) {
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("id column id_a is STRING") &&
+        e.getMessage.contains("integral"), e.getMessage)
+    }
+    val nullPairs = Seq((Some(1L), Some(2L)), (None, Some(3L)))
+      .toDF("id_a", "id_b")
+    for (run <- Seq(
+        () => DupClusters.minLabelClusters(nullPairs, "id_a", "id_b")
+          .collect(),
+        () => DupClusters.connectedComponents(nullPairs, "id_a", "id_b")
+          .collect())) {
+      val e = intercept[Exception](run())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage)
+          .contains("null id in column id_a")), e.toString)
+    }
+  }
+
   test("connected components: equals a local union-find on a random " +
     "multi-component graph") {
     val rnd = new scala.util.Random(7)

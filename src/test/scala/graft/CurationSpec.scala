@@ -327,8 +327,7 @@ class CurationSpec extends AnyFunSuite {
         (3L, "entirely different words here")).toDF("doc_id", "text"),
       "text", 16, l2 = true)
       .select(col("doc_id").as("vec_id"), col("hvec_l2").as("embedding"))
-    val cents = graft.sim.IvfCosine.centroidsDf(spark,
-      graft.sim.IvfCosine.pinnedCentroids(2, 16))
+    val cents = graft.sim.IvfCosine.pinnedCentroids(2, 16)
     val pruned = graft.sim.ProtoPrune.prune(vecs, "vec_id", "embedding",
       cents, keepFrac = 0.5).collect()
     assert(pruned.length == 3)

@@ -494,8 +494,7 @@ class PlanSpec extends AnyFunSuite {
     assert(dDiff <= math.max(2, exactD.size / 100), s"$dDiff moved")
 
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val cents = graft.sim.IvfCosine.centroidsDf(spark,
-      graft.sim.IvfCosine.pinnedCentroids(8, 64))
+    val cents = graft.sim.IvfCosine.pinnedCentroids(8, 64)
     val exactP = graft.sim.ProtoPrune.prune(emb, "vec_id", "embedding",
         cents, keepFrac = 0.5)
       .collect().map(r => r.getLong(0) -> r.getBoolean(3)).toMap
